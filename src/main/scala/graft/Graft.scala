@@ -124,4 +124,9 @@ object Graft {
 
   /** Null-or-blank predicate in the same normal form. */
   def isBlank(c: Column): Column = txt(c) === ""
+
+  /** Reference to a column by its verbatim name. Source headers are user
+    * data: a dot (`VISIT.NAME`) or backtick is part of the name, never a
+    * struct path, so the name is quoted before Spark parses it. */
+  def srcCol(name: String): Column = col("`" + name.replace("`", "``") + "`")
 }

@@ -9,9 +9,13 @@ import graft.standards.{SdtmDomain, Standards, VariableType}
 /**
  * Per-domain validation driver (`checks/mod.rs:24-77` — checks 1-8 in
  * order) producing a typed `Seq[Issue]`. Every per-variable statistic
- * rides ONE fused aggregation over the frame; only the V5 duplicate-SEQ
- * check needs its own groupBy job. Cross-domain checks live in
- * [[Validate]] (X1-X5 anti-joins).
+ * comes from ONE long-form profile ([[Validate.valueCounts]]: a
+ * constant-size plan, one `(i, v)` shuffle) joined with two small
+ * broadcast tables — per-variable rules and the allowed CT spellings — and
+ * folded per column, so no plan carries a CT term literal and the
+ * regexes run once per distinct value. Only the V5 duplicate-SEQ check
+ * needs its own groupBy job. Cross-domain checks live in [[Validate]]
+ * (X1-X5 anti-joins).
  */
 object DomainValidation {
 
@@ -48,39 +52,16 @@ object DomainValidation {
     val presentVars = vars.filter(v => present.contains(v.name.toUpperCase))
     if (presentVars.isEmpty) return issues.result()
 
-    // one fused aggregation: blanks, type conformance, ISO shape, lengths,
-    // CT membership counts + samples
-    val aggs = Seq.newBuilder[Column]
-    aggs += count(lit(1)).as("__total")
-    presentVars.foreach { v =>
-      val c = col(present(v.name.toUpperCase))
-      val n = v.name
-      aggs += sum(when(isBlank(c), 1L).otherwise(0L)).as(s"${n}__blank")
-      if (v.dataType == VariableType.Num)
-        aggs += sum(when(!isBlank(c) && !txt(c).rlike(Validate.NumericRegex), 1L)
-          .otherwise(0L)).as(s"${n}__badnum")
-      if (isDateVar(n))
-        aggs += sum(when(!isBlank(c) && !txt(c).rlike(Validate.IsoDateRegex), 1L)
-          .otherwise(0L)).as(s"${n}__baddate")
-      declaredLengths.get(n).foreach { len =>
-        aggs += sum(when(length(txt(c)) > len, 1L).otherwise(0L)).as(s"${n}__overlen")
-        aggs += max(length(txt(c))).as(s"${n}__maxlen")
-      }
-      v.firstCodelistCode.foreach { code =>
-        val allowed = ct.lookupMap(code).keys.toSeq
-        if (allowed.nonEmpty) {
-          val bad = !isBlank(c) && !upper(txt(c)).isin(allowed: _*)
-          aggs += sum(when(bad, 1L).otherwise(0L)).as(s"${n}__badct")
-          aggs += slice(sort_array(collect_set(when(bad, txt(c)))), 1, 5).as(s"${n}__ctsamples")
-        }
-      }
-    }
-    val row = df.agg(aggs.result().head, aggs.result().tail: _*).head()
-    val total = row.getAs[Long]("__total")
+    val stats = domainProfile(df,
+      presentVars.map(v => present(v.name.toUpperCase) -> v), declaredLengths, ct)
+      .collect().map(r => r.getInt(0) -> r).toMap
 
-    presentVars.foreach { v =>
+    presentVars.zipWithIndex.foreach { case (v, i) =>
       val n = v.name
-      val blanks = row.getAs[Long](s"${n}__blank")
+      val r = stats.get(i)
+      def stat(k: Int): Long = r.fold(0L)(_.getLong(k))
+      val total = stat(1)
+      val blanks = stat(2)
       if (v.isRequired) {
         if (blanks == total)
           issues += Issue(domain.name, n, "RequiredMissing", "Reject", total, Nil)
@@ -90,30 +71,17 @@ object DomainValidation {
         issues += Issue(domain.name, n, "ExpectedEmpty", "Warning", total, Nil)
       if (v.isIdentifier && blanks > 0)
         issues += Issue(domain.name, n, "IdentifierNull", "Error", blanks, Nil)
-      if (v.dataType == VariableType.Num) {
-        val bad = row.getAs[Long](s"${n}__badnum")
-        if (bad > 0) issues += Issue(domain.name, n, "NonNumeric", "Error", bad, Nil)
-      }
-      if (isDateVar(n)) {
-        val bad = row.getAs[Long](s"${n}__baddate")
-        if (bad > 0) issues += Issue(domain.name, n, "NonIso8601", "Error", bad, Nil)
-      }
+      if (stat(3) > 0) issues += Issue(domain.name, n, "NonNumeric", "Error", stat(3), Nil)
+      if (stat(4) > 0) issues += Issue(domain.name, n, "NonIso8601", "Error", stat(4), Nil)
       declaredLengths.get(n).foreach { len =>
-        val over = row.getAs[Long](s"${n}__overlen")
-        if (over > 0)
-          issues += Issue(domain.name, n, "LengthExceeded", "Warning", over,
-            Seq(s"max=${row.getAs[Int](s"${n}__maxlen")}", s"declared=$len"))
+        if (stat(5) > 0)
+          issues += Issue(domain.name, n, "LengthExceeded", "Warning", stat(5),
+            Seq(s"max=${r.get.getInt(6)}", s"declared=$len"))
       }
-      v.firstCodelistCode.foreach { code =>
-        if (ct.lookupMap(code).nonEmpty) {
-          val bad = row.getAs[Long](s"${n}__badct")
-          if (bad > 0) {
-            val extensible = ct.get(code).exists(_.extensible)
-            val samples = row.getSeq[String](row.fieldIndex(s"${n}__ctsamples"))
-            issues += Issue(domain.name, n, "InvalidCtValue",
-              if (extensible) "Info" else "Error", bad, samples)
-          }
-        }
+      if (stat(7) > 0) {
+        val extensible = v.firstCodelistCode.flatMap(ct.get).exists(_.extensible)
+        issues += Issue(domain.name, n, "InvalidCtValue",
+          if (extensible) "Info" else "Error", stat(7), r.get.getSeq[String](8))
       }
     }
 
@@ -129,6 +97,52 @@ object DomainValidation {
           dup.getLong(0), Nil)
     }
     issues.result()
+  }
+
+  /** V1-V8 per-column fold, read back by position after `i`: total,
+    * blanks, non-numeric, non-ISO, over-length rows, max length, bad-CT
+    * rows, the first 5 sorted bad-CT values. */
+  private val ProfileAggs: Seq[Column] = {
+    val v = col("v")
+    val badCt = col("hasct") && Validate.filled && col("known").isNull
+    Seq(
+      Validate.totalRows,
+      Validate.rowsWhere(!Validate.filled),
+      Validate.rowsWhere(col("isnum") && Validate.filled && !v.rlike(Validate.NumericRegex)),
+      Validate.rowsWhere(col("isdate") && Validate.filled && !v.rlike(Validate.IsoDateRegex)),
+      Validate.rowsWhere(length(v) > col("len")),
+      max(length(v)),
+      Validate.rowsWhere(badCt),
+      slice(sort_array(collect_list(when(badCt, v))), 1, 5))
+  }
+
+  /** The V1-V8 profile of `columns` (source column, its variable), one
+    * row per column position `i`: [[Validate.valueCounts]] joined with
+    * each column's rules — a broadcast `(i, isnum, isdate, len, hasct)`
+    * table — and left-joined on `(i, upper(v))` with a broadcast table of
+    * every allowed CT spelling, so CT membership is a hash probe per
+    * distinct value (`known` is null for a miss), never a literal `IN`
+    * list in the plan; then folded by [[ProfileAggs]]. */
+  private[graft] def domainProfile(df: DataFrame,
+      columns: Seq[(String, graft.standards.SdtmVariable)],
+      declaredLengths: Map[String, Int],
+      ct: graft.standards.TerminologyRegistry): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val allowed = columns.map { case (_, v) =>
+      v.firstCodelistCode.map(ct.lookupMap(_).keys.toSeq).getOrElse(Nil)
+    }
+    val rules = columns.zip(allowed).zipWithIndex.map { case (((_, v), terms), i) =>
+      (i, v.dataType == VariableType.Num, isDateVar(v.name),
+        declaredLengths.get(v.name), terms.nonEmpty)
+    }.toDF("i", "isnum", "isdate", "len", "hasct")
+    val terms = allowed.zipWithIndex.flatMap { case (ts, i) => ts.map(i -> _) }
+      .toDF("i", "u").withColumn("known", lit(true))
+    val counts = Validate.valueCounts(df, columns.map(_._1))
+      .join(broadcast(rules), "i")
+      .withColumn("u", upper(col("v")))
+      .join(broadcast(terms), Seq("i", "u"), "left")
+    Validate.profile(counts, ProfileAggs)
   }
 
   /** Study-wide cross-domain checks X1-X5 over a domain registry. Without a

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Graft.{isBlank, txt}
+import graft.Graft.{srcCol, txt}
 import graft.functions.JaroWinkler
 import graft.operators.Validate.NumericRegex
 
@@ -30,43 +30,37 @@ case class Suggestion(sourceColumn: String, targetVariable: String, score: Doubl
 /**
  * Schema-matching engine F1-F4 (SURVEY §2.4).
  *
- * Hint building is the only part that touches data — ONE fused aggregation
- * pass per table (every per-column statistic is a `Column` aggregate, so the
- * whole hints build is a single scan regardless of column count; at 100 TB
- * that is one map-side-combined job, no shuffle beyond the final reduce).
- * Scoring and assignment run on the driver over column *names* (≤ hundreds
- * of strings) — semantics studied from
+ * Hint building is the only part that touches data: one long-form
+ * [[Validate.valueCounts]] pass per table (every row exploded into
+ * `(column, value)` cells, one `groupBy(i, v).count()`, one `(i, v)`
+ * shuffle) and a small per-column fold of the counts. The plan does not
+ * grow with the column count — no per-column distinct aggregates, no
+ * `Expand`. Scoring and assignment run on the driver over column *names*
+ * (≤ hundreds of strings) — semantics studied from
  * `crates/tss-submit/src/map/score.rs:120-293`.
  */
 object Mapping {
 
-  // ---- F1: column hints (one fused scan) -----------------------------------
+  // ---- F1: column hints (long-form profile) --------------------------------
 
-  /** Aggregate expressions for one column: [blanks, distinct-non-blank,
-    * numeric-count]. Distinct uses exact countDistinct to match the
-    * reference's BTreeSet semantics (swap for approx_count_distinct at
-    * extreme cardinality). */
-  private def hintExprs(c: String): Seq[Column] = {
-    val v = col(c)
-    Seq(
-      sum(when(isBlank(v), 1L).otherwise(0L)).as(s"${c}__blank"),
-      countDistinct(when(!isBlank(v), txt(v))).as(s"${c}__uniq"),
-      sum(when(!isBlank(v) && txt(v).rlike(NumericRegex), 1L).otherwise(0L)).as(s"${c}__num"))
-  }
-
-  /** F1 — build hints for every column in one pass (hints.rs:14-103):
-    * null_ratio counts blank-after-trim as null; unique_ratio is distinct
-    * trimmed values over non-null count; is_numeric when >90% of non-null
-    * values parse as f64. */
+  /** F1 — build hints for every column (hints.rs:14-103) from one
+    * [[Validate.valueCounts]] pass: null_ratio counts blank-after-trim as
+    * null; unique_ratio is distinct trimmed values (exact, the reference's
+    * BTreeSet semantics) over non-null count; is_numeric when >90% of
+    * non-null values parse as f64. A zero-row frame gives every column
+    * null_ratio 1.0 and zero for the rest. */
   def columnHints(df: DataFrame, labels: Map[String, String] = Map.empty): Map[String, ColumnHint] = {
     val cols = df.columns.toSeq
     if (cols.isEmpty) return Map.empty
-    val row = df.agg(count(lit(1)).as("__total"), cols.flatMap(hintExprs): _*).head()
-    val total = row.getAs[Long]("__total")
-    cols.map { c =>
-      val blanks = row.getAs[Long](s"${c}__blank")
-      val uniq = row.getAs[Long](s"${c}__uniq")
-      val num = row.getAs[Long](s"${c}__num")
+    val stats = Validate.profile(Validate.valueCounts(df, cols), Seq(
+      Validate.totalRows,
+      Validate.rowsWhere(!Validate.filled),
+      Validate.valuesWhere(Validate.filled),
+      Validate.rowsWhere(Validate.filled && col("v").rlike(NumericRegex))))
+      .collect().map(r => r.getInt(0) -> r).toMap
+    cols.zipWithIndex.map { case (c, i) =>
+      val Seq(total, blanks, uniq, num) =
+        stats.get(i).map(r => (1 to 4).map(r.getLong)).getOrElse(Seq(0L, 0L, 0L, 0L))
       val nonNull = total - blanks
       c -> ColumnHint(
         isNumeric = nonNull > 0 && num.toDouble / nonNull > 0.9,
@@ -78,7 +72,7 @@ object Mapping {
 
   /** Hints as a DataFrame (for the oracle-checked query surface). */
   def columnHintsDf(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val hints = columnHints(df.select(cols.map(col): _*))
+    val hints = columnHints(df.select(cols.map(srcCol): _*))
     val spark = df.sparkSession
     import spark.implicits._
     cols.map { c =>
@@ -92,7 +86,7 @@ object Mapping {
   /** F2 — up to `limit` distinct non-empty values (hints.rs:105-133), made
     * deterministic by sorting (the reference returns scan order). */
   def sampleValues(df: DataFrame, column: String, limit: Int): Seq[String] =
-    df.select(txt(col(column)).as("v")).where(col("v") =!= "")
+    df.select(txt(srcCol(column)).as("v")).where(col("v") =!= "")
       .distinct().orderBy("v").limit(limit)
       .collect().map(_.getString(0)).toSeq
 

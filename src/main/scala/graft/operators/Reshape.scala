@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Graft.{isBlank, txt}
+import graft.Graft.{isBlank, srcCol, txt}
 
 /** Per-source-column SUPP config (SuppColumnConfig — the QNAM/QLABEL/QORIG/
   * QEVAL a user assigns to an extra column routed to SUPP--). */
@@ -207,11 +207,11 @@ object Reshape {
     codelists.foldLeft(df) { case (acc, (colName, codelist)) =>
       if (!acc.columns.contains(colName)) acc
       else {
-        val decoded = decodeColumn(col(colName), codelist)
+        val decoded = decodeColumn(srcCol(colName), codelist)
         val target = decodeTargetName(colName)
         if (acc.columns.contains(target))
           acc.withColumn(target,
-            when(!isBlank(col(target)), txt(col(target))).otherwise(decoded))
+            when(!isBlank(srcCol(target)), txt(srcCol(target))).otherwise(decoded))
         else acc.withColumn(target, decoded)
       }
     }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.Graft.{isBlank, txt}
+import graft.Graft.{isBlank, srcCol, txt}
 
 /** Typed validation finding — the shared shape (domain, variable, kind,
   * severity, count, samples) of every reference issue variant
@@ -31,10 +31,14 @@ case class Issue(
  *
  * Shape studied from the check modules under `crates/tss-submit/src/validate/checks/` and
  * `validate/cross_domain.rs`. The reference walks every column row-by-row;
- * here each per-domain check is one `Column` aggregate so ALL checks over a
- * domain fuse into a single scan (`df.agg(exprs:_*)`) — the design that
- * survives 100 TB: one pass, no collect, samples via `slice(sort_array(
- * collect_set))` capped at 5.
+ * here the per-column statistics of a frame come from ONE long-form
+ * profile kernel, [[valueCounts]]: each row explodes into `(i, v)` cells
+ * and a single `groupBy(i, v).count()` folds them. The plan is the same
+ * size for 5 columns or 500 — one aggregate, one `(i, v)` shuffle — and
+ * every consumer (mapping hints, Items.csv profiling, V1-V8) is a small
+ * `groupBy(i)` over the counts, so per-value predicates (regexes, CT
+ * membership) run once per distinct value, not once per row. Samples are
+ * capped at 5, sorted.
  */
 object Validate {
 
@@ -70,6 +74,42 @@ object Validate {
     * reference's MAX_INVALID_VALUES=5 samples, made order-stable. */
   def samples(c: Column, bad: Column, n: Int = 5): Column =
     slice(sort_array(collect_set(when(bad, txt(c)))), 1, n)
+
+  // ---- long-form profile kernel -----------------------------------------------
+
+  /** Long-form value counts of `cols`: one row `(i, v, n)` per column
+    * position `i` (0-based, in `cols` order) and distinct normalized text
+    * value `v` (trimmed, blank = ""), with `n` the number of rows holding
+    * it. Every row explodes into one `(i, v)` cell per column and a single
+    * `groupBy(i, v).count()` folds the cells, so the plan has one
+    * aggregate and one shuffle whatever the column count. A column's row
+    * total is `sum(n)` over its `i`; a zero-row frame yields no rows at
+    * all, so consumers default absent columns to zero counts. */
+  def valueCounts(df: DataFrame, cols: Seq[String]): DataFrame = {
+    val cells = cols.zipWithIndex.map { case (c, i) =>
+      struct(lit(i).as("i"), txt(srcCol(c)).as("v"))
+    }
+    df.select(inline(array(cells: _*))).groupBy("i", "v").agg(count(lit(1)).as("n"))
+  }
+
+  /** Over [[valueCounts]] grouped by `i`: rows of the column whose value
+    * satisfies `p`. */
+  def rowsWhere(p: Column): Column = sum(when(p, col("n")).otherwise(0L))
+
+  /** Over [[valueCounts]] grouped by `i`: distinct values satisfying `p`. */
+  def valuesWhere(p: Column): Column = count(when(p, lit(1)))
+
+  /** Over [[valueCounts]] grouped by `i`: the column's row count. */
+  val totalRows: Column = sum(col("n"))
+
+  /** Over [[valueCounts]]: the value is not blank. */
+  val filled: Column = col("v") =!= ""
+
+  /** Fold `counts` (the kernel's output, possibly joined with per-column
+    * rule tables) per column: one row per `i` — `i`, then `aggs`. The
+    * result is a few rows per table; each consumer collects its own. */
+  def profile(counts: DataFrame, aggs: Seq[Column]): DataFrame =
+    counts.groupBy("i").agg(aggs.head, aggs.tail: _*)
 
   /** Config key gating the X1/X5 broadcast hints (plain bytes or a Spark
     * size spelling like "64m"; 0 or any negative value disables the hint

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Graft.srcCol
 import graft.operators._
 import graft.sinks.{CtStandard, XmlSinks, XmlVariable, XmlCodelist, XptWriter}
 import graft.sources.{CsvIngest, ItemMeta, ItemsMetadata}
@@ -22,10 +23,14 @@ case class DomainState(
 /**
  * E1/E2/E3 — study lifecycle orchestration (SURVEY §3), Spark-first:
  *
- *  - E1 create: per-domain CSV scans (parallel plans), ONE hints
- *    aggregation per domain, driver-side scoring/suggestion;
+ *  - E1 create: per-domain CSV scans (parallel plans), ONE long-form
+ *    profile query per domain for the hints (`Validate.valueCounts`: a
+ *    plan of constant size in the column count, one `(i, v)` shuffle),
+ *    driver-side scoring/suggestion;
  *  - E2 preview+validate: normalization is a single unexecuted projection;
- *    validation fires one fused aggregate per domain + broadcast anti-joins
+ *    validation runs one long-form profile query per domain — the same
+ *    kernel joined with broadcast per-variable rule and CT-spelling
+ *    tables, no CT literal lists in the plan — plus broadcast anti-joins
  *    study-wide;
  *  - E3 export: per-domain XPT / Dataset-XML / Define-XML with one
  *    stats aggregate per domain feeding the writers.
@@ -92,7 +97,7 @@ class StudySession(val spark: SparkSession, val studyId: String,
     val (df, _) = CsvIngest.readCsvTable(spark, itemsCsvPath, itemsHeaderRows)
     val dataCols = df.columns.filterNot(_ == CsvIngest.RowIdCol)
     val scores = ItemsMetadata.analyzeColumns(
-      df.select(dataCols.toIndexedSeq.map(col): _*))
+      df.select(dataCols.toIndexedSeq.map(srcCol): _*))
     val detected = ItemsMetadata.detectSchema(scores)
       .map(schema => ItemsMetadata.loadItems(df, schema))
     val itemsForRouting = detected.getOrElse(itemsMetadata)
@@ -159,7 +164,7 @@ class StudySession(val spark: SparkSession, val studyId: String,
     val headerLabels = headers.labels
       .map(ls => headers.columns.zip(ls).toMap).getOrElse(Map.empty)
     val itemLabels = dataCols.flatMap(c => itemsMetadata.get(c).map(c -> _.label)).toMap
-    val hints = Mapping.columnHints(df.select(dataCols.map(col): _*),
+    val hints = Mapping.columnHints(df.select(dataCols.map(srcCol): _*),
       itemLabels ++ headerLabels)
 
     val domainMeta = domainMetaFor(codeU).getOrElse(
@@ -437,7 +442,7 @@ class StudySession(val spark: SparkSession, val studyId: String,
           val suppSrcCols = (configs.map(_._1)
             .filter(ds.source.columns.contains)
             .filterNot(idCols.contains) :+ CsvIngest.RowIdCol).distinct
-          val joined = ds.source.select(suppSrcCols.map(col): _*).join(
+          val joined = ds.source.select(suppSrcCols.map(srcCol): _*).join(
             normalized.select((idCols :+ CsvIngest.RowIdCol).map(col): _*),
             Seq(CsvIngest.RowIdCol))
           Reshape.buildSupp(code, studyId, joined, configs).foreach { supp =>

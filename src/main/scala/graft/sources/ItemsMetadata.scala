@@ -3,8 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.Graft.{isBlank, txt}
-import graft.operators.Validate.NumericRegex
+import graft.Graft.{srcCol, txt}
+import graft.operators.Validate
 
 /** Statistical profile of one column (ColumnScores —
   * `crates/tss-ingest/src/metadata/detection.rs:40-57`). */
@@ -46,34 +46,33 @@ case class ItemMeta(
  * text; DataType = cardinality 2-8 short values; Mandatory = binary/ternary
  * very short; FormatName = many empties; ContentLength = numeric short.
  *
- * All per-column statistics come from ONE fused aggregation pass (the
- * reference walks each column row-by-row); role assignment is driver-side
- * over the tiny stats vector.
+ * All per-column statistics come from ONE long-form profile pass,
+ * [[graft.operators.Validate.valueCounts]] (the reference walks each
+ * column row-by-row): a constant-size plan with one `(i, v)` shuffle, then
+ * a per-column fold of the counts. Role assignment is driver-side over the
+ * tiny stats vector.
  */
 object ItemsMetadata {
 
-  private def statExprs(c: String): Seq[Column] = {
-    val v = col(c)
-    Seq(
-      countDistinct(when(!isBlank(v), txt(v))).as(s"${c}__uniq"),
-      sum(when(isBlank(v), 1L).otherwise(0L)).as(s"${c}__empty"),
-      sum(when(!isBlank(v), length(txt(v))).otherwise(0L)).as(s"${c}__len"),
-      sum(when(!isBlank(v) && txt(v).rlike(NumericRegex), 1L).otherwise(0L)).as(s"${c}__num"),
-      max(when(!isBlank(v), length(txt(v)))).as(s"${c}__maxlen"))
-  }
-
-  /** Profile every column in one scan. */
+  /** Profile every column from one [[Validate.valueCounts]] pass. */
   def analyzeColumns(df: DataFrame): Seq[ColumnScores] = {
     val cols = df.columns.toSeq.filterNot(_ == CsvIngest.RowIdCol)
     if (cols.isEmpty) return Nil
-    val row = df.agg(count(lit(1)).as("__total"), cols.flatMap(statExprs): _*).head()
-    val total = row.getAs[Long]("__total")
+    // blank cells ("") add length 0: the sum and max need no filter
+    val len = length(col("v"))
+    val stats = Validate.profile(Validate.valueCounts(df, cols), Seq(
+      Validate.totalRows,
+      Validate.valuesWhere(Validate.filled),
+      Validate.rowsWhere(!Validate.filled),
+      sum(len * col("n")),
+      Validate.rowsWhere(Validate.filled && col("v").rlike(Validate.NumericRegex)),
+      max(len)))
+      .collect().map(r => r.getInt(0) -> r).toMap
     cols.zipWithIndex.map { case (c, idx) =>
-      val uniq = row.getAs[Long](s"${c}__uniq")
-      val empty = row.getAs[Long](s"${c}__empty")
-      val len = row.getAs[Long](s"${c}__len")
-      val num = row.getAs[Long](s"${c}__num")
-      val maxLen = Option(row.getAs[Integer](s"${c}__maxlen")).map(_.toInt).getOrElse(0)
+      val r = stats.get(idx)
+      val Seq(total, uniq, empty, textLen, num) =
+        r.map(r => (1 to 5).map(r.getLong)).getOrElse(Seq(0L, 0L, 0L, 0L, 0L))
+      val maxLen = r.flatMap(r => Option(r.getAs[Integer](6))).map(_.toInt).getOrElse(0)
       val nonNull = total - empty
       // +1 for the empty "value" so cardinality matches the reference's
       // n_unique-over-all-rows (null counts as one distinct value)
@@ -82,7 +81,7 @@ object ItemsMetadata {
         index = idx,
         name = c,
         uniqueness = if (total > 0) card.toDouble / total else 0.0,
-        avgLength = if (nonNull > 0) len.toDouble / nonNull else 0.0,
+        avgLength = if (nonNull > 0) textLen.toDouble / nonNull else 0.0,
         numericRatio = if (nonNull > 0) num.toDouble / nonNull else 0.0,
         cardinality = card,
         emptyRatio = if (total > 0) empty.toDouble / total else 0.0,
@@ -153,7 +152,7 @@ object ItemsMetadata {
     val byNorm = df.columns.map(c => c.replaceAll("\\s", "").toUpperCase -> c).toMap
     (byNorm.get("FORMATNAME"), byNorm.get("CODEVALUE"), byNorm.get("CODETEXT")) match {
       case (Some(f), Some(v), Some(t)) =>
-        df.select(txt(col(f)).as("f"), txt(col(v)).as("v"), txt(col(t)).as("t"))
+        df.select(txt(srcCol(f)).as("f"), txt(srcCol(v)).as("v"), txt(srcCol(t)).as("t"))
           .where(col("f") =!= "" && col("v") =!= "")
           .collect()
           .groupBy(_.getString(0).toUpperCase)
@@ -171,7 +170,7 @@ object ItemsMetadata {
     // list — resolve against the same basis, wherever the ingest row id
     // happens to sit in this frame
     val cols = df.columns.filterNot(_ == CsvIngest.RowIdCol)
-    def c(r: ColumnRole): Column = txt(col(cols(r.index)))
+    def c(r: ColumnRole): Column = txt(srcCol(cols(r.index)))
     val sel = df.select(
       c(schema.id).as("id"),
       c(schema.label).as("label"),

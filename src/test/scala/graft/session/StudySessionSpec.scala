@@ -245,6 +245,54 @@ class StudySessionSpec extends SparkSpec {
     assert(aeXml.contains("""<ItemData ItemOID="IT.AE.AETERM" Value="Headache"/>"""))
   }
 
+  test("dotted source headers are names, not struct paths: ingest → export") {
+    val d = Paths.get("target", "tmp", "study_dotted")
+    Files.createDirectories(d)
+    Files.write(d.resolve("dm.csv"),
+      ("SUBJID,RFSTDTC,SEX,RACE.CODE,VISIT.NAME\n" +
+        "101,2024-01-10,M,1,Screening\n" +
+        "102,2024-01-12,F,2,Screening\n").getBytes)
+    Files.write(d.resolve("vs.csv"),
+      ("SUBJID,VSTESTCD,VSORRES,VSORRESU,VISIT.NAME,VSDTC,NOTE.TEXT\n" +
+        "101,SYSBP,120,mmHg,Screening,2024-01-10,seated\n" +
+        "101,SYSBP,118,mmHg,Week 1,2024-01-17,\n" +
+        "102,SYSBP,131,mmHg,Screening,2024-01-12,standing\n").getBytes)
+    Files.write(d.resolve("Items.csv"),
+      ("Item.ID,Item.Label,Data.Type\n" +
+        "SUBJID,Subject identifier as recorded,text\n" +
+        "VISIT.NAME,Visit name as entered in the EDC,text\n" +
+        "RACE.CODE,Race of the participant coded,integer\n").getBytes)
+    val s = new StudySession(spark, "DOTS")
+    s.loadItemsMetadata(d.resolve("Items.csv").toString,
+      codelists = Map("RACE.CODE" -> Map("1" -> "WHITE", "2" -> "ASIAN")))
+    s.addDomain("DM", d.resolve("dm.csv").toString)
+    s.addDomain("VS", d.resolve("vs.csv").toString)
+    assert(s.domainState("DM").get.source.columns.contains("RACE.CODE_DECODED"))
+    val vs = s.domainState("VS").get
+    assert(vs.hints("VISIT.NAME").uniqueRatio == 2.0 / 3)
+    assert(vs.hints("VISIT.NAME").label.contains("Visit name as entered in the EDC"))
+    s.acceptAllSuggestions("VS")
+    assert(vs.mapping.acceptManual("VISIT", "VISIT.NAME").isRight)
+
+    val preview = s.preview("VS").get.orderBy("_row_id").collect()
+    assert(preview.map(_.getAs[String]("VISIT")).toSeq ==
+      Seq("Screening", "Week 1", "Screening"))
+    assert(!s.validate("VS").exists(_.variable == "VISIT"))
+    assert(s.validate("DM").nonEmpty)
+
+    s.configureSupp("VS", Seq(
+      "NOTE.TEXT" -> graft.operators.SuppColumnConfig("QNOTE", "Position note", "CRF")))
+    val outDir = "target/tmp/study_dotted_out"
+    val written = s.exportAll(outDir)
+    assert(written.exists(_.endsWith("suppvs.xpt")))
+    val xpt = XptReader.read(s"$outDir/vs.xpt")
+    val visitIdx = xpt.columns.indexWhere(_.name == "VISIT")
+    assert(xpt.rows.map(_(visitIdx)) == Seq("Screening", "Week 1", "Screening"))
+    val supp = XptReader.read(s"$outDir/suppvs.xpt")
+    val qval = supp.columns.indexWhere(_.name == "QVAL")
+    assert(supp.rows.map(_(qval)).toSet == Set("seated", "standing"))
+  }
+
   test("E1: Items.csv metadata wires labels and codelist decode into ingest") {
     val d = Paths.get("target", "tmp", "study_items")
     Files.createDirectories(d)
